@@ -139,22 +139,9 @@ object GeoFunctions extends Serializable {
     "st_intersection" -> intersectionU,
     "st_transform" -> transformU)
 
-  /** Register all functions for SQL use in an existing session. */
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("st_area", areaU)
-    spark.udf.register("st_perimeter", perimeterU)
-    spark.udf.register("st_centroid_x", centroidXU)
-    spark.udf.register("st_centroid_y", centroidYU)
-    spark.udf.register("st_bbox", bboxU)
-    spark.udf.register("st_measures", measuresU)
-    spark.udf.register("st_scale", scaleU)
-    spark.udf.register("st_scale_about_centroid", scaleAboutCentroidU)
-    spark.udf.register("st_translate", translateU)
-    spark.udf.register("st_buffer_point", bufferPointU)
-    spark.udf.register("st_distance", distanceU)
-    spark.udf.register("st_touches", touchesU)
-    spark.udf.register("st_shared_border", sharedBorderU)
-    spark.udf.register("st_geojson_to_wkt", geojsonToWktU)
-    spark.udf.register("st_convex_intersection_area", convexIntersectionAreaU)
-  }
+  /** Register all functions for SQL use in an existing session —
+    * the same name list the extension injects, so the two cannot
+    * drift apart. */
+  def register(spark: SparkSession): Unit =
+    all.foreach { case (name, u) => spark.udf.register(name, u) }
 }

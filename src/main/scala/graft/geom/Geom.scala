@@ -269,26 +269,41 @@ object Ops {
 
   // ---- Queen contiguity (reference border_util.py:5) ----
 
-  /** True when boundaries share at least a point (edge OR vertex). */
-  def touches(g1: Geom, g2: Geom): Boolean = {
-    val pa = polysOf(g1); val pb = polysOf(g2)
-    pa.exists(p1 => pb.exists(p2 =>
-      p1.rings.flatMap(_.segments).exists { case (a, b) =>
-        p2.rings.flatMap(_.segments).exists { case (c, d) => segsIntersect(a, b, c, d) }
-      }))
+  /** Every boundary segment of each polygon part, built once so the
+    * O(|A|·|B|) pair loops below do not rebuild the inner side per
+    * outer segment. */
+  private def partSegments(g: Geom): IndexedSeq[IndexedSeq[(Pt, Pt)]] =
+    polysOf(g).map(_.rings.flatMap(_.segments).toIndexedSeq)
+
+  private def touchesSegs(sa: IndexedSeq[IndexedSeq[(Pt, Pt)]],
+                          sb: IndexedSeq[IndexedSeq[(Pt, Pt)]]): Boolean =
+    sa.exists(s1 => sb.exists(s2 =>
+      s1.exists { case (a, b) => s2.exists { case (c, d) => segsIntersect(a, b, c, d) } }))
+
+  private def sharedSegs(sa: IndexedSeq[IndexedSeq[(Pt, Pt)]],
+                         sb: IndexedSeq[IndexedSeq[(Pt, Pt)]]): Double = {
+    var acc = 0.0
+    for (s1 <- sa; s2 <- sb; u <- s1; v <- s2) acc += collinearOverlap(u._1, u._2, v._1, v._2)
+    acc
   }
+
+  /** True when boundaries share at least a point (edge OR vertex). */
+  def touches(g1: Geom, g2: Geom): Boolean =
+    touchesSegs(partSegments(g1), partSegments(g2))
 
   /** Length of the shared (collinear, overlapping) boundary between
     * two geometries — the Queen weight in the reference
     * (border_util.py:44: intersection(...).length). Vertex-only
     * contact contributes 0. */
-  def sharedBorderLength(g1: Geom, g2: Geom): Double = {
-    var acc = 0.0
-    for (p1 <- polysOf(g1); p2 <- polysOf(g2);
-         s1 <- p1.rings.flatMap(_.segments); s2 <- p2.rings.flatMap(_.segments)) {
-      acc += collinearOverlap(s1._1, s1._2, s2._1, s2._2)
-    }
-    acc
+  def sharedBorderLength(g1: Geom, g2: Geom): Double =
+    sharedSegs(partSegments(g1), partSegments(g2))
+
+  /** The Queen weight of a candidate pair in one pass over its
+    * segments: `sharedBorderLength` (bit-identical — same terms, same
+    * order) when the boundaries touch, None when they do not. */
+  def queenWeight(g1: Geom, g2: Geom): Option[Double] = {
+    val sa = partSegments(g1); val sb = partSegments(g2)
+    if (touchesSegs(sa, sb)) Some(sharedSegs(sa, sb)) else None
   }
 
   /** Sutherland-Hodgman clip of a polygon against a CONVEX clip

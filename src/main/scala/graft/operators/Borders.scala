@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GeoFunctions._
+import graft.geom.{Ops, Wkt}
 
 /** Distributed Queen-contiguity border detection.
   *
@@ -30,12 +31,34 @@ import graft.functions.GeoFunctions._
   * pay candidates against what their bbox actually overlaps, and the
   * small-geometry fine grid keeps its selectivity.
   *
-  * At 100 TB / millions of polygons, the only shuffle is the
-  * (level, cell) groupBy (AQE-splittable when a cell is hot); the
-  * exact geometry work stays data-local. The base cell size and the
-  * native-level set are two scalar-sized aggregates.
+  * One pass per pair: the exact kernel (touch test + shared-border
+  * length) runs ONCE per unordered candidate pair, parsing both WKTs
+  * once, and a single generator emits both directed rows — there is
+  * no second branch that would re-run the join and the kernel.
+  *
+  * One reused exchange: the binned rows go through one explicit
+  * `repartition(spark.sql.shuffle.partitions, L, cell)`. Both join
+  * sides read the same pruned columns from it, so the right side is a
+  * ReusedExchange of the left (one map stage) and the join adds no
+  * shuffle of its own. The trade-off: AQE neither coalesces nor
+  * skew-splits an explicit-count repartition. Not coalescing is the
+  * point — the pair stage is CPU-bound, and AQE sized it by bytes
+  * down to 1-2 tasks on a few cores — but a hot (level, cell) is now
+  * one task rather than an AQE-split one; the multi-level grid above
+  * is what keeps cells small. The base cell size and the native-level
+  * set are two scalar-sized aggregates.
   */
 object Borders {
+
+  /** The exact pair kernel: both WKTs parsed once, the shared-border
+    * length when the boundaries touch, null when they do not. Private
+    * to this operator — not part of the SQL function surface. */
+  private val queenWeightU = udf((w1: String, w2: String) =>
+    Ops.queenWeight(Wkt.read(w1), Wkt.read(w2))).withName("queen_pair_weight")
+
+  private def numShufflePartitions(df: DataFrame): Int =
+    df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.numShufflePartitions
 
   /** @param df   (idCol, geomCol WKT)
     * @return symmetric DataFrame: focal_id, neighbor_id, weight
@@ -71,30 +94,32 @@ object Borders {
       .collect().map(_.getInt(0)).sorted
     val nativeLevels = if (collected.isEmpty) Array(0) else collected
 
+    // Every binned row goes through ONE explicit exchange on the join
+    // keys: both join sides read the same pruned column set, so the
+    // right side reuses the left side's shuffle (one map stage), and
+    // the join below needs no exchange of its own (when AQE turns it
+    // into a broadcast join, the broadcast is built from that reuse).
+    val cellSize = (level: Column) => lit(cs0) * pow(lit(2.0), level.cast("double"))
     val binned = leveled
       .withColumn("L", explode(filter(
         array(nativeLevels.map(lit(_)): _*), l => l >= col("level"))))
-      .withColumn("cs", lit(cs0) * pow(lit(2.0), col("L").cast("double")))
+      .withColumn("cs", cellSize(col("L")))
       .withColumn("cx0", floor(col("minx") / col("cs"))).withColumn("cx1", floor(col("maxx") / col("cs")))
       .withColumn("cy0", floor(col("miny") / col("cs"))).withColumn("cy1", floor(col("maxy") / col("cs")))
       .withColumn("cell", explode(flatten(transform(
         sequence(col("cx0"), col("cx1")),
         cx => transform(sequence(col("cy0"), col("cy1")),
           cy => struct(cx.as("x"), cy.as("y")))))))
-      .drop("cx0", "cx1", "cy0", "cy1")
+      .select("id", "geom", "L", "cell", "level", "minx", "miny", "maxx", "maxy")
+      .repartition(numShufflePartitions(df), col("L"), col("cell"))
 
-    val l = binned.select(
-      col("id").as("l_id"), col("geom").as("l_geom"), col("L"), col("cell"),
-      col("cs"), col("level").as("l_level"),
-      col("minx").as("l_minx"), col("miny").as("l_miny"),
-      col("maxx").as("l_maxx"), col("maxy").as("l_maxy"))
-    val r = binned.select(
-      col("id").as("r_id"), col("geom").as("r_geom"), col("L"), col("cell"),
-      col("level").as("r_level"),
-      col("minx").as("r_minx"), col("miny").as("r_miny"),
-      col("maxx").as("r_maxx"), col("maxy").as("r_maxy"))
+    def side(p: String) = binned.select(
+      col("id").as(s"${p}_id"), col("geom").as(s"${p}_geom"), col("L"), col("cell"),
+      col("level").as(s"${p}_level"),
+      col("minx").as(s"${p}_minx"), col("miny").as(s"${p}_miny"),
+      col("maxx").as(s"${p}_maxx"), col("maxy").as(s"${p}_maxy"))
 
-    val pairs = l.join(r, Seq("L", "cell"))
+    val pairs = side("l").join(side("r"), Seq("L", "cell"))
       .filter(col("l_id") < col("r_id"))
       // each pair joins ONLY at the coarser of its two native levels
       .filter(greatest(col("l_level"), col("r_level")) === col("L"))
@@ -103,13 +128,15 @@ object Borders {
               col("l_miny") <= col("r_maxy") && col("r_miny") <= col("l_maxy"))
       // emit each pair from exactly one cell: the one holding the
       // bbox-intersection min corner (at this level's cell size)
-      .filter(col("cell.x") === floor(greatest(col("l_minx"), col("r_minx")) / col("cs")) &&
-              col("cell.y") === floor(greatest(col("l_miny"), col("r_miny")) / col("cs")))
-      .filter(st_touches(col("l_geom"), col("r_geom")))
-      .withColumn("weight", st_shared_border(col("l_geom"), col("r_geom")))
-      .select(col("l_id"), col("r_id"), col("weight"))
+      .filter(col("cell.x") === floor(greatest(col("l_minx"), col("r_minx")) / cellSize(col("L"))) &&
+              col("cell.y") === floor(greatest(col("l_miny"), col("r_miny")) / cellSize(col("L"))))
+      // ONE exact-geometry evaluation per unordered pair; the weight
+      // is projected, never filtered on, because Catalyst would push
+      // such a filter below the projection and run the kernel twice
+      .select(col("l_id"), col("r_id"), queenWeightU(col("l_geom"), col("r_geom")).as("weight"))
 
-    pairs.select(col("l_id").as("focal_id"), col("r_id").as("neighbor_id"), col("weight"))
-      .unionAll(pairs.select(col("r_id").as("focal_id"), col("l_id").as("neighbor_id"), col("weight")))
+    pairs.select(inline(when(col("weight").isNotNull, array(
+        struct(col("l_id").as("focal_id"), col("r_id").as("neighbor_id"), col("weight")),
+        struct(col("r_id").as("focal_id"), col("l_id").as("neighbor_id"), col("weight"))))))
   }
 }

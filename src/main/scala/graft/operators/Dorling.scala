@@ -31,10 +31,13 @@ import graft.functions.GeoFunctions._
   * Scale design: the per-iteration neighbour search is a grid-binned
   * self-join (cell = 2*widest, 3x3 probe), so each iteration is one
   * shuffle of O(n) small rows — no O(n^2) pair matrix. Radii/borders
-  * are computed once up front. Deterministic decimal summation keeps
-  * k bit-identical at any parallelism. Lineage is cut per iteration
-  * with localCheckpoint (the standard Spark iterative-algorithm
-  * pattern, cf. GraphX Pregel).
+  * are computed once up front: the borders in one pass per pair
+  * through one reused exchange (see [[Borders]]), the regions from
+  * one `st_measures` parse per WKT, materialized once, and `widest`
+  * with the region count from one aggregate. Deterministic decimal
+  * summation keeps k bit-identical at any parallelism. Lineage is cut
+  * per iteration with localCheckpoint (the standard Spark
+  * iterative-algorithm pattern, cf. GraphX Pregel).
   */
 object Dorling {
 
@@ -48,11 +51,16 @@ object Dorling {
     */
   def radii(df: DataFrame, idCol: String, valueCol: String, geomCol: String,
             precomputedBorders: Option[DataFrame] = None): (DataFrame, Double) = {
+    // One st_measures parse per region (the struct in its own
+    // projection, fields extracted above it), materialized once: the
+    // k aggregate, the radius column and every later reader of the
+    // regions read the checkpoint instead of re-parsing the WKT.
     val regions = df.select(
-        col(idCol).as("id"), col(valueCol).cast("double").as("value"), col(geomCol).as("geom"))
-      .withColumn("x", st_centroid_x(col("geom")))
-      .withColumn("y", st_centroid_y(col("geom")))
-      .withColumn("perimeter", st_perimeter(col("geom")))
+        col(idCol).as("id"), col(valueCol).cast("double").as("value"),
+        st_measures(col(geomCol)).as("m"))
+      .select(col("id"), col("value"), col("m.cx").as("x"), col("m.cy").as("y"),
+        col("m.perimeter").as("perimeter"))
+      .localCheckpoint()
 
     val borders = precomputedBorders.getOrElse(Borders.compute(df, idCol, geomCol))
 
@@ -74,7 +82,7 @@ object Dorling {
       .collect()
     val k = row.getDouble(0) / row.getDouble(1)
 
-    (regions.withColumn("radius", sqrt(col("value") / math.Pi) * lit(k)).drop("geom"), k)
+    (regions.withColumn("radius", sqrt(col("value") / math.Pi) * lit(k)), k)
   }
 
   /** One Jacobi iteration of the force model over (id, value, x, y,
@@ -278,11 +286,13 @@ object Dorling {
     // radii's k-aggregate and inside every iteration's step join.
     val borders = Borders.compute(df, idCol, geomCol).localCheckpoint()
     val (regions0, _) = radii(df, idCol, valueCol, geomCol, Some(borders))
-    val widest = regions0.agg(max(col("radius"))).collect()(0).getDouble(0)
+    // widest and the region count from ONE aggregate over the
+    // materialized regions
+    val Array(stats) = regions0.agg(max(col("radius")), count(lit(1))).collect()
+    val widest = stats.getDouble(0)
+    val n = stats.getLong(1)
 
     var pos = regions0.select("id", "value", "x", "y", "perimeter", "radius")
-      .localCheckpoint()
-    val n = pos.count()
     if (n <= smallN && iterations > 0) {
       pos = jacobiLocal(pos, borders, widest, iterations, ratio, friction)
     } else {

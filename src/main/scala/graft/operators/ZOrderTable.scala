@@ -635,9 +635,12 @@ object ZOrderTable {
     * cuts where the binary search pays 0.37 s; `ZmapProbe`, value
     * mismatches 0 on the real dims). Value-identical by construction:
     * the insertion point of an upper-bound binary search over a
-    * sorted (duplicates allowed) array IS the ≤-count; a NULL or NaN
-    * value fails every `v >= cut` comparison and falls through to
-    * the low edge — 0, exactly what the filter-size path produced. */
+    * sorted (duplicates allowed) array IS the ≤-count. A NaN value
+    * sorts above every double in Spark's comparisons, so it passes
+    * every `v >= cut` and lands at the high edge, `cuts.length`; only
+    * a NULL value fails every comparison and falls through to the low
+    * edge, 0 — in both cases exactly what the filter-size path
+    * produced. */
   private def upperBoundCount(v: Column, cuts: Array[Column]): Column = {
     def f(lo: Int, hi: Int): Column =
       if (lo >= hi) lit(lo.toLong)

@@ -493,6 +493,7 @@ private[graft] class RowArrayReadSupport(
   import org.apache.parquet.schema.MessageType
   import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
   import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+  import scala.jdk.CollectionConverters._
 
   override def init(ctx: InitContext): ReadSupport.ReadContext = {
     val file = ctx.getFileSchema
@@ -502,10 +503,15 @@ private[graft] class RowArrayReadSupport(
     // output row per stored row — keep ONE file column as the row
     // pacemaker rather than relying on parquet-mr's empty-projection
     // path (some versions reject it, and its EmptyRecordReader never
-    // calls the root converter's start()); its values discard
+    // calls the root converter's start()); its values discard. The
+    // pacemaker is the first PRIMITIVE field: its discard converter is
+    // a PrimitiveConverter, which a group field cannot take
     val fields =
       if (kept.nonEmpty) kept.map(n => file.getType(file.getFieldIndex(n)))
-      else Array(file.getType(0))
+      else Array(file.getFields.asScala.find(_.isPrimitive).getOrElse(
+        throw new UnsupportedOperationException(
+          s"no primitive column to pace rows by in $where: every " +
+            "requested column predates the file, and it holds only groups")))
     new ReadSupport.ReadContext(new MessageType(file.getName, fields: _*))
   }
 

@@ -289,4 +289,25 @@ class ChangeFeedSpec extends SparkSuite {
         rows(d.select(drained.columns.map(col): _*)), s"step v${v - 1} -> v$v")
     }
   }
+
+  test("an all-predating file paces rows by its first PRIMITIVE field, " +
+    "and a groups-only file refuses naming its path") {
+    import org.apache.parquet.hadoop.api.InitContext
+    import org.apache.parquet.schema.{GroupType, MessageType, PrimitiveType, Type}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    import scala.jdk.CollectionConverters._
+    val path = "/tbl/bucket=0/part-00000.parquet"
+    def init(file: MessageType) =
+      new graft.streaming.RowArrayReadSupport(Array("added_later"),
+        Array(org.apache.spark.sql.types.LongType), 1, path)
+        .init(new InitContext(new org.apache.hadoop.conf.Configuration(),
+          new java.util.HashMap[String, java.util.Set[String]](), file))
+    val group = new GroupType(Type.Repetition.OPTIONAL, "meta",
+      new PrimitiveType(Type.Repetition.OPTIONAL, PrimitiveTypeName.INT32, "inner"))
+    val key = new PrimitiveType(Type.Repetition.REQUIRED, PrimitiveTypeName.INT64, "key")
+    val paced = init(new MessageType("t", group, key)).getRequestedSchema
+    assert(paced.getFields.asScala.map(_.getName).toSeq === Seq("key"))
+    val err = intercept[UnsupportedOperationException](init(new MessageType("t", group)))
+    assert(err.getMessage.contains(path), err.getMessage)
+  }
 }

@@ -26,6 +26,32 @@ class GeoSqlSpec extends SparkSuite {
     assert(row.getAs[Double]("sb") === 1.0)
   }
 
+  test("register() covers every st_* function the extension injects") {
+    // a fresh session: nothing registered yet, so only register() can
+    // make these three callable
+    val s = spark.newSession()
+    Seq("st_intersection_area", "st_intersection", "st_transform").foreach { f =>
+      assert(!s.catalog.functionExists(f), s"$f present before register()")
+    }
+    GeoFunctions.register(s)
+    val a = "'POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))'"
+    val b = "'POLYGON ((2 2, 6 2, 6 6, 2 6, 2 2))'"
+    val row = s.sql(
+      s"""SELECT
+         |  st_intersection_area($a, $b) AS ia,
+         |  st_area(st_intersection($a, $b)) AS ai,
+         |  st_transform('POINT (10 20)', 'EPSG:4326', 'EPSG:3857') AS fwd,
+         |  st_transform(st_transform('POINT (10 20)', 'EPSG:4326', 'EPSG:3857'),
+         |               'EPSG:3857', 'EPSG:4326') AS back
+         |""".stripMargin).collect()(0)
+    assert(row.getAs[Double]("ia") === 4.0)
+    assert(row.getAs[Double]("ai") === 4.0)
+    val fwd = graft.geom.Wkt.read(row.getAs[String]("fwd")).asInstanceOf[graft.geom.GPoint].p
+    assert(math.abs(fwd.x - 6378137.0 * math.toRadians(10.0)) < 1e-6)
+    val back = graft.geom.Wkt.read(row.getAs[String]("back")).asInstanceOf[graft.geom.GPoint].p
+    assert(math.abs(back.x - 10.0) < 1e-9 && math.abs(back.y - 20.0) < 1e-9)
+  }
+
   test("st_measures agrees with the per-measure functions from one parse") {
     GeoFunctions.register(spark)
     val wkt = "'POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))'"
